@@ -8,12 +8,11 @@ import graft.expressions._
 /** Catalyst extension registering graft's native expressions in the SQL
   * function registry, so `spark.sql("SELECT str_q2b(text) ...")` works —
   * the `SparkSessionExtensions` route is how a library ships custom
-  * expressions without forking Spark:
+  * expressions without forking Spark. On a `SparkSession.Builder`:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)            // programmatic, or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)       // programmatic, or
+  * builder.config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
   * Scalar k-parameters (shingle width) arrive as literal int arguments

@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args.foreach { name =>
       println(s"===== $name =====")
@@ -30,7 +24,6 @@ object PlanPeek {
       } else if (name == "substrdup") {
         // q91's dup-window miner: invisible in the final plan behind
         // report()'s localCheckpoint
-        import org.apache.spark.sql.functions._
         graft.dedup.SubstringDedup.dupWindows(
           Tables(spark, dir, "documents"), "doc_id", "text", width = 10)
           .explain("formatted")

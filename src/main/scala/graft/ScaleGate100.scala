@@ -107,16 +107,9 @@ object ScaleGate100 {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dir = args.lift(1).getOrElse("/tmp/graft-sf10")
     val copies = args.lift(2).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-gate-100")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
+    val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -160,11 +153,11 @@ object ScaleGate100 {
     // tolerant (MinBaseSec floors them); the big runs are the signal.
     // a cluster scales shuffle partitions with the data; 6× for 100×
     // keeps per-task shuffle blocks at the ×30 tier's per-task size
-    spark.conf.set("spark.sql.shuffle.partitions", (cpus.toInt * 6).toString)
+    spark.conf.set("spark.sql.shuffle.partitions", (cpus * 6).toString)
     println(s"SCALEGATE100 ×$copies at $dir")
     val big = rerunCapBreaches(spark, dir,
       ScaleRehearsal.measure(spark, dir, names), capIdx)
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
     println(s"SCALEGATE100 baseline at $src")
     val base = ScaleRehearsal.measure(spark, src, names).map(q => q.name -> q).toMap
 

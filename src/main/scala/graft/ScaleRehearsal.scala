@@ -64,41 +64,28 @@ object ScaleRehearsal {
     * Queries that throw come back with `error` set, never aborting the
     * sweep. */
   def measure(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[QM] = {
-    val known = names.filter(SparkEntry.queries.contains)
-    // positional zip-back, not a by-name map: a caller measuring the
-    // same query twice (an inline A/B) must get both measurements
-    val it = measureThunks(spark,
-      known.map(n => n -> (() => SparkEntry.queries(n)(spark, sfDir)))).iterator
-    names.map(n =>
-      if (SparkEntry.queries.contains(n)) it.next()
-      else QM(n, 0, 0, 0, 0, 0, 0, 0, Some("unknown query")))
-  }
-
-  /** [[measure]] over arbitrary plan thunks instead of registered query
-    * names — the probe mains (SessionizeSkewProbe) A/B operator FORMS
-    * that are deliberately not part of the query surface. */
-  def measureThunks(spark: SparkSession,
-      thunks: Seq[(String, () => org.apache.spark.sql.DataFrame)]): Seq[QM] = {
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
-    try thunks.map { case (name, mk) =>
-      System.gc(); m.reset()
-      val t0 = System.nanoTime()
-      try {
-        val obs = new org.apache.spark.sql.Observation()
-        mk().observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
-          .write.format("noop").mode("overwrite").save()
-        val rows = obs.get("n").asInstanceOf[Long]
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener bus drains asynchronously
-        QM(name, sec, m.shuffleRead.sum, m.shuffleWrite.sum,
-          m.spillDisk.sum, m.peakExecMem, m.tasks.sum, rows, None)
-      } catch { case e: Throwable =>
-        QM(name, (System.nanoTime() - t0) / 1e9, 0, 0, 0, 0, 0, 0,
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
-      }
-    } finally spark.sparkContext.removeSparkListener(m)
+    try names.map(name => SparkEntry.queries.get(name) match {
+      case None => QM(name, 0, 0, 0, 0, 0, 0, 0, Some("unknown query"))
+      case Some(fn) =>
+        System.gc(); m.reset()
+        val t0 = System.nanoTime()
+        try {
+          val obs = new org.apache.spark.sql.Observation()
+          fn(spark, sfDir).observe(obs, org.apache.spark.sql.functions.count(
+              org.apache.spark.sql.functions.lit(1)).as("n"))
+            .write.format("noop").mode("overwrite").save()
+          val rows = obs.get("n").asInstanceOf[Long]
+          val sec = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(300) // listener bus drains asynchronously
+          QM(name, sec, m.shuffleRead.sum, m.shuffleWrite.sum,
+            m.spillDisk.sum, m.peakExecMem, m.tasks.sum, rows, None)
+        } catch { case e: Throwable =>
+          QM(name, (System.nanoTime() - t0) / 1e9, 0, 0, 0, 0, 0, 0,
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
+        }
+    }) finally spark.sparkContext.removeSparkListener(m)
   }
 
   private final class Metrics extends SparkListener {
@@ -126,21 +113,11 @@ object ScaleRehearsal {
       if (args.lift(1).contains("all")) SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else defaultNames
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // a cluster sizes shuffle partitions with the data; pin them per run
-    // so rehearsals can separate "plan scales badly" from "32 partitions
-    // were too few at this SF" (the fixed-width artifact)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // (SPARK_GRAFT_SHUFFLE_PARTITIONS) so rehearsals can separate "plan
+    // scales badly" from "too few partitions at this SF" (the
+    // fixed-width artifact)
+    val spark = Session.local()
 
     SparkEntry.entry(spark).collect() // warmup
 

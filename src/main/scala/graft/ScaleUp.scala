@@ -160,16 +160,7 @@ object ScaleUp {
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val eventsSpan = args.lift(3).contains("span")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     build(spark, src, out, copies, eventsSpan = eventsSpan)
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -11,26 +10,13 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Config-sensitivity overrides (round-13 verdict #7): a green that
-    // depends on a partition-count or AQE-coalesce accident (tie order
-    // inside a window, a coalesce that happens to keep one file) is
-    // invisible while every run uses the same config. The standing probe
-    // re-runs Verify with SPARK_GRAFT_SHUFFLE_PARTITIONS=7 (prime —
-    // different plans everywhere) and SPARK_GRAFT_AQE=false; 173/173
-    // must hold there too.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Config sensitivity (round-13 verdict #7): a green that depends on a
+    // partition-count or AQE-coalesce accident (tie order inside a
+    // window, a coalesce that happens to keep one file) is invisible
+    // while every run uses the same config. The standing probe re-runs
+    // Verify with SPARK_GRAFT_SHUFFLE_PARTITIONS=7 and SPARK_GRAFT_AQE=false
+    // (both read by Session.local); 173/173 must hold there too.
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (wanted(name)) {

@@ -275,7 +275,7 @@ object MinHashLSH {
     * point and the spec's word-3 routing corpora.
     *
     * MIXED-density validation (round 12): κ was calibrated on uniform
-    * self-union corpora, so a 500k-doc `MixedCorpus` (half standard-salt
+    * self-union corpora, so a 500k-doc mixed corpus (half standard-salt
     * dense — collision-amplified char-8 — half every-word-salt unique)
     * probed whether one GLOBAL route survives intra-call mixing. The
     * mixture measured ρ = 8.02 (C = 32.1M — the dense half dominates C,
@@ -285,7 +285,8 @@ object MinHashLSH {
     * 311.0 s, identical 13,720-pair outputs. Measured NEGATIVE for
     * per-source routing: the cost model compares actual shipment counts
     * (2C vs κ·n·B), both of which aggregate correctly over a mixture,
-    * so no per-source or per-partition-histogram split is needed. */
+    * so no per-source or per-partition-histogram split is needed
+    * (COVERAGE.md "Router validated on a MIXED-density corpus"). */
   val InBandCostFactor = 2.9
 
   /** Auto-route short-circuit: corpora at or below this many docs go

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, GraftPlanBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -72,37 +72,6 @@ object BoundedTopK {
     GraftPlanBridge.ofRows(spark,
       BoundedTopKNode(groupCols.map(UnresolvedAttribute(_)), sortOrders, k,
         df.queryExecution.analyzed))
-  }
-
-  /** Regime-routing top-k: the bounded heap wins when groups are FEW
-    * (each task's heaps stay resident); when group cardinality
-    * approaches row count, groups×k heap rows no longer fit and the
-    * window path (UnsafeExternalSorter-backed, spills) is the
-    * memory-safe choice — and with many groups the window is already
-    * parallel, so the heap's straggler advantage is gone too.
-    *
-    * The estimate is one map-side-combined `approx_count_distinct` pass
-    * — at 100 TB, cheap relative to either downstream shape, and
-    * callers that already know their regime call `perGroup` /
-    * `ops.TopK.perGroup` directly. `maxResidentRows` bounds groups×k
-    * PER TASK in the worst case (every task sees every group); the
-    * 4M-row default keeps worst-case heap residency in the hundreds of
-    * MB for typical row widths. */
-  def perGroupAuto(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
-                   k: Int, maxResidentRows: Long = 4L << 20): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
-    import org.apache.spark.sql.functions.{approx_count_distinct, col, row_number, struct}
-    val groups = df
-      .select(approx_count_distinct(struct(groupCols.map(col): _*)).as("g"))
-      .head().getLong(0)
-    if (groups * k <= maxResidentRows) perGroup(df, groupCols, order, k)
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(groupCols.map(col): _*).orderBy(order: _*)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
   }
 }
 

@@ -22,8 +22,9 @@ object EnrichQueries {
       pmod(partkey, lit(2))
 
   /** A1: per-order 2/3-majority vote on part brand. Relational two-agg
-    * form: measured FASTER than the one-shuffle `majorityFullAgg`
-    * Aggregator here (1.5s vs 2.5s at sf0.1) — both hash aggs are
+    * form: measured FASTER than a one-shuffle typed Aggregator form
+    * here (1.5s vs 2.5s at sf0.1; 17.2 vs 35.1 s at ×100, COVERAGE.md
+    * "q23/q24 vote forms AT ×100") — both hash aggs are
     * codegen'd with map-side partials, while the typed form pays kryo
     * ser/de on every Map buffer; the Aggregator wins only when the
     * per-group logic can't be expressed as codegen'd aggs (see q24). */
@@ -42,8 +43,9 @@ object EnrichQueries {
     * Uses the typed-Aggregator hybrid: base reduction stays relational
     * (codegen, map-side partials), the typed cascade sees only the
     * reduced (doc, code, cnt) rows with per-order buffers bounded by
-    * order size. Fastest of the four SectorVote forms at EVERY measured
-    * scale under full materialization (noop sink — ScratchForms):
+    * order size. Fastest of the four vote forms at EVERY measured
+    * scale under full materialization (noop sink — COVERAGE.md
+    * "Scale-hazard hunt at ×30 and ×100", round 6):
     * sf0.1 2.6 s / ×30 12.9 s / ×100 45.9 s, vs hash-agg cascade
     * 2.9/14.2/52.0, windowed 6.7/21.0/94.1, compact-HOF 3.2/37.6/166.8.
     * The compact form's HOF lambdas evaluate INTERPRETED per row, which
@@ -66,10 +68,11 @@ object EnrichQueries {
       // eager checkpoint BEFORE the presentation sort: a global sort's
       // range exchange runs a bounds-SAMPLING pass that executes its
       // child plan a second time, and here the child is the whole typed
-      // cascade over the reduced rows — Q24Profile measured the re-run
-      // at ~19 s of q24's ~59 s ×100 wall (full 58.7 vs checkpointed
-      // 39.9 s min-of-2; the sort itself is ~free once its input is
-      // materialized). sf0.1 is unchanged within noise (~150k rows).
+      // cascade over the reduced rows — the re-run measured at ~19 s
+      // of q24's ~59 s ×100 wall (full 58.7 vs checkpointed 39.9 s
+      // min-of-2; the sort itself is ~free once its input is
+      // materialized; COVERAGE.md "q24 profiled and fixed"). sf0.1 is
+      // unchanged within noise (~150k rows).
       // The blocks are ContextCleaner-released once the returned plan
       // is executed and dropped (the read case — NOT the release-now
       // case of ops.Checkpoints.release).
